@@ -1,8 +1,12 @@
-"""Parse Spark's uncompressed JSON event log into per-job records.
+"""Parse Spark's uncompressed JSON event log into per-job records and
+SQL executions.
 
 Each job carries the job group and description it was submitted under
 (`SparkContext.setJobGroup`), so its stages' task metrics can be
-attributed to the workload op that ran it.
+attributed to the workload op that ran it.  A SQL execution spans one
+action of a DataFrame in the JVM, from after physical planning to its
+result: its jobs, and the driver work around them (adaptive
+re-planning, code generation, broadcasts, result collection).
 """
 
 from __future__ import annotations
@@ -21,10 +25,16 @@ def _new_totals() -> dict:
     }
 
 
-def parse(lines) -> dict[int, dict]:
-    """Jobs by id: {group, desc, start, end, ok, stages: set, tasks:
-    [(launch, finish)], totals} with times in epoch seconds."""
+SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+SQL_END = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
+
+
+def parse(lines) -> tuple[dict[int, dict], dict[int, dict]]:
+    """(jobs, SQL executions), each by id, with times in epoch seconds.
+    A job is {group, desc, start, end, ok, stages: set, tasks: [(launch,
+    finish)], totals}; an execution is {group, desc, start, end}."""
     jobs: dict[int, dict] = {}
+    sql: dict[int, dict] = {}
     stage_job: dict[int, int] = {}
     for line in lines:
         line = line.strip()
@@ -44,6 +54,13 @@ def parse(lines) -> dict[int, dict]:
             }
             for sid in ev.get("Stage IDs", []):
                 stage_job.setdefault(sid, jid)
+        elif kind == SQL_START:
+            sql[ev["executionId"]] = {"group": ev.get("jobGroupId"), "desc": ev.get("description"),
+                                      "start": ev["time"] / 1000.0, "end": None}
+        elif kind == SQL_END:
+            ex = sql.get(ev["executionId"])
+            if ex is not None:
+                ex["end"] = ev["time"] / 1000.0
         elif kind == "SparkListenerJobEnd":
             job = jobs.get(ev["Job ID"])
             if job is not None:
@@ -59,7 +76,7 @@ def parse(lines) -> dict[int, dict]:
             job = jobs.get(stage_job.get(ev["Stage ID"]))
             if job is not None:
                 _add_task(job, ev)
-    return jobs
+    return jobs, sql
 
 
 def _add_task(job: dict, ev: dict) -> None:
@@ -85,9 +102,8 @@ def _add_task(job: dict, ev: dict) -> None:
     )
 
 
-def read_dir(path: str) -> dict[int, dict]:
-    """Parse the single application log in `path` (the newest when a
-    run restarted its session)."""
+def read_dir(path: str) -> tuple[dict[int, dict], dict[int, dict]]:
+    """Parse the single application log in `path`."""
     logs = [os.path.join(path, f) for f in os.listdir(path)
             if not f.startswith(".") and not f.endswith(".crc")]
     if not logs:

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print one JSON result line.
 
-    python3 perfbench/run.py --workload fixtures-sf0.1 --seed 1 --seconds 15 --trace 0
-    python3 perfbench/run.py --workload rag-session --seed 1 --seconds 15 --trace 1
+    python3 perfbench/run.py --workload fixtures-sf0.1 --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload rag-session --seed 1 --seconds 10 --trace 1
 
 Run from the root of a checkout of the engine.  The last line of stdout
 is {"correct", "attempted", "failed", "metrics"}: with --trace 0 the
@@ -31,8 +31,6 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench")
 EXPECTED = os.path.join(HERE, "expected.json")
 WORKLOADS = ("fixtures-sf0.1", "rag-session")
-SETUP_REPEATS = 3
-DRIVER_MEM = "3g"
 
 
 def parse_args(argv):
@@ -56,8 +54,8 @@ def check_checkout() -> None:
 def isolate(run_dir: str, traced: bool) -> dict[str, str]:
     """Point Python's, the JVM's and Spark's temp and local dirs into
     `run_dir` before the JVM starts, and set the launch options every
-    run shares: no console progress bars, local[nproc], the driver heap,
-    and in a traced run the uncompressed JSON event log."""
+    run shares: no console progress bars, local[nproc], and in a traced
+    run the uncompressed JSON event log."""
     import tempfile
 
     dirs = {k: os.path.join(run_dir, k) for k in ("tmp", "local", "events", "warehouse")}
@@ -67,7 +65,6 @@ def isolate(run_dir: str, traced: bool) -> dict[str, str]:
     os.environ["SPARK_LOCAL_DIRS"] = dirs["local"]
     tempfile.tempdir = None
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", DRIVER_MEM)
     confs = {
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": dirs["warehouse"],
@@ -87,8 +84,8 @@ def isolate(run_dir: str, traced: bool) -> dict[str, str]:
 
 
 def start_session(app: str):
-    """One session set-up: build the engine's session, load the
-    registry and run a first job."""
+    """The session set-up: launch the JVM and build the engine's
+    session, load the registry and run a first job."""
     from vector_ai_npm_spark import registry
     from vector_ai_npm_spark.session import apply_runtime_confs, get_spark
 
@@ -133,16 +130,9 @@ def main(argv=None) -> int:
     import workloads
     from spans import Tracer
 
-    # set-up, repeated: the first includes the JVM launch and the
-    # registry import, later ones restart the session in the same JVM
-    setups = []
-    spark = None
-    for _ in range(SETUP_REPEATS):
-        t0 = time.perf_counter()
-        if spark is not None:
-            spark.stop()
-        spark = start_session(f"perfbench-{args.workload}")
-        setups.append(time.perf_counter() - t0)
+    t0 = time.perf_counter()
+    spark = start_session(f"perfbench-{args.workload}")
+    session_s = time.perf_counter() - t0
     jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
 
     tracer = Tracer(False)
@@ -166,10 +156,10 @@ def main(argv=None) -> int:
     spark.stop()
     peak_rss = vm_hwm_mb("self") + vm_hwm_mb(jvm_pid)
     left_bytes, left_entries = tree_usage(dirs["tmp"], dirs["local"])
-    jobs = None
+    events = None
     if args.trace:
         import eventlog
-        jobs = eventlog.read_dir(dirs["events"])
+        events = eventlog.read_dir(dirs["events"])
     shutil.rmtree(run_dir, ignore_errors=True)
 
     if args.record:
@@ -184,13 +174,13 @@ def main(argv=None) -> int:
         "failed": failed_ops + len(stray),
     }
     if args.trace:
-        vals, trace_doc = metrics.per_layer(run, tracer, jobs, setups, peak_rss,
+        vals, trace_doc = metrics.per_layer(run, tracer, events, session_s, peak_rss,
                                             left_bytes, left_entries)
         os.makedirs(os.path.join(WORK, "traces"), exist_ok=True)
         with open(os.path.join(WORK, "traces", f"{args.workload}-seed{args.seed}.json"), "w") as fh:
             json.dump(trace_doc, fh, indent=1)
     else:
-        vals = metrics.end_to_end(run, setups)
+        vals = metrics.end_to_end(run, session_s)
     result["metrics"] = {k: {"value": v, "unit": metrics.UNITS[k]} for k, v in vals.items()}
     print(json.dumps(result))
     return 0

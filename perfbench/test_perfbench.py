@@ -6,6 +6,7 @@
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 import os
 import sys
@@ -116,7 +117,7 @@ EVENTLOG = os.path.join(HERE, "testdata", "eventlog_small.jsonl")
 
 def test_eventlog_attributes_jobs_to_groups():
     with open(EVENTLOG) as fh:
-        jobs = eventlog.parse(fh)
+        jobs, executions = eventlog.parse(fh)
     groups = {(j["group"], j["desc"]) for j in jobs.values()}
     assert ("wl:alpha", "force") in groups
     assert ("wl:beta", "construct") in groups
@@ -133,6 +134,21 @@ def test_eventlog_attributes_jobs_to_groups():
     assert beta["shuffle_write_bytes"] > alpha["shuffle_write_bytes"] > 0
     assert beta["shuffle_read_bytes"] > 0
     assert both["task_run_s"] >= 0 and both["failed_tasks"] == 0
+
+
+def test_eventlog_sql_executions_hold_their_jobs():
+    with open(EVENTLOG) as fh:
+        lines = fh.readlines()
+    jobs, executions = eventlog.parse(lines)
+    assert {(e["group"], e["desc"]) for e in executions.values()} == {
+        ("wl:alpha", "force"), ("wl:beta", "construct"), ("other", "idle")}
+    for line in lines:
+        ev = json.loads(line)
+        if ev["Event"] == "SparkListenerJobStart":
+            ex = executions[int(ev["Properties"]["spark.sql.execution.id"])]
+            job = jobs[ev["Job ID"]]
+            assert ex["start"] <= job["start"] <= job["end"] <= ex["end"]
+            assert ex["group"] == job["group"]
 
 
 def test_face_order_is_a_function_of_the_seed():

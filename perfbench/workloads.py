@@ -1,7 +1,7 @@
 """The benchmark's workloads, each a closed loop with one client.
 
 A workload runs untimed warm-up work, then timed passes until the timed
-time reaches the run's `--seconds` (whole passes only).  Every op is
+time reaches the run's `--seconds` (whole cycles of passes only).  Every op is
 checked outside the timed region; an op that raises or fails its check
 counts as failed.  A traced run turns tracing off and on in
 off-on-on-off blocks of passes, so the run also measures the tracing
@@ -38,7 +38,7 @@ FIXTURE_FACES = (
 @contextmanager
 def on_collect(callback):
     """Call `callback(df, rows)` after every `DataFrame.collect` inside
-    the block (used untimed, or in traced passes only)."""
+    the block."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     orig = DataFrame.collect
@@ -75,14 +75,16 @@ class Run:
         self.passes: list[dict] = []   # timed passes
         self.errors: list[str] = []
         self.info: dict = {}           # workload sizes and extra numbers
+        self.cycle = 1                 # passes that make one repeat of the op mix
 
     def job_group(self, op: str, desc: str) -> None:
         self.spark.sparkContext.setJobGroup(f"{self.workload}:{op}", desc)
 
     def loop(self, run_pass) -> None:
-        """Run timed passes until `seconds` of timed time have passed.  A
-        traced run runs whole off-on-on-off blocks, so the traced and
-        untraced passes see the same warming drift."""
+        """Run timed passes until `seconds` of timed time have passed,
+        in whole cycles.  A traced run runs whole off-on-on-off blocks,
+        so the traced and untraced passes see the same warming drift."""
+        block = 4 if self.traced else self.cycle
         timed = 0.0
         i = 0
         while True:
@@ -107,7 +109,7 @@ class Run:
                                 "start": t0, "end": time.time()})
             timed += spent
             i += 1
-            if timed >= self.seconds and (not self.traced or i % 4 == 0):
+            if timed >= self.seconds and i % block == 0:
                 break
 
     def timed_op(self, name: str, kind: str, pass_i: int, tracing: bool, fn):
@@ -199,6 +201,8 @@ def run_fixtures(run: Run, expected: dict | None) -> None:
     def one_pass(i: int, tracing: bool) -> float:
         spent = 0.0
         for face in fixture_order(run.seed, i):
+            capture.last = None
+
             def op(face=face):
                 run.job_group(face, "construct")
                 with run.tracer.span("registry.construct", "registry"):
@@ -210,21 +214,35 @@ def run_fixtures(run: Run, expected: dict | None) -> None:
             spent += dt
             want = tuples.get(face)
             run.ops[-1]["rows"] = n or 0
-            if ok and (want is None or n != want[0]):
-                run.fail_last(f"row count {n} != warm-up tuple {want}")
+            if ok and (want is None or capture.last != want):
+                run.fail_last(f"tuple {capture.last} != warm-up tuple {want}")
         return spent
 
-    run.loop(one_pass)
+    # every timed run's full bench._force tuple is captured and checked,
+    # so a wrong result on a warm repeat fails even when its row count
+    # is right
+    with on_collect(capture):
+        run.loop(one_pass)
     run.spark.sparkContext.setJobGroup("perfbench:idle", "idle")
 
 
 # --- rag-session --------------------------------------------------------------
 
 TABLE = "docs"
+# The op mix follows the session probed on 4 cores before the benchmark
+# was written: 8 ingest_data batches of 200 docs, 80 asks and 2
+# delete_data calls, so 200-doc ingests and 10 asks per ingest.  A pass
+# is one ingest and its 10 asks in a seeded order; every second pass
+# also deletes, so a run (a whole number of two-pass cycles) always
+# measures a delete, and two ingests' files build up between the
+# rewrites a delete does.  That is twice the probe's delete rate: at one
+# delete per four ingests a run would need four ~17 s passes, and a
+# traced run (four passes at the least) would not fit its time limit.
 INIT_DOCS = 200    # ingested untimed, before the timed passes
-BATCH_DOCS = 100   # docs per timed ingest_data call
-ASKS_PER_PASS = 5
-DELETE_DOCS = 50   # doc ids per timed delete_data call
+BATCH_DOCS = 200   # docs per timed ingest_data call
+ASKS_PER_INGEST = 10
+DELETE_EVERY = 2   # passes per delete_data call
+DELETE_DOCS = 100  # doc ids per timed delete_data call
 WARMUP_DELETE_DOCS = 20
 TOP_K = 5
 
@@ -251,8 +269,31 @@ def mdx_doc(rng: np.random.Generator, doc_id: int) -> str:
     return "".join(parts)
 
 
+def store_signature(path: str) -> tuple:
+    """(name, size, mtime) of every file under the store."""
+    sig = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            sig.append((os.path.join(root, f), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
+
+
+_STORE_CACHE: dict = {}
+
+
 def read_store(path: str):
-    """(doc_id, content, embedding matrix) of the store as on disk."""
+    """(doc_id, content, embedding matrix) of the store as on disk.  It
+    is read again only when a file under it changed: asks write nothing,
+    so the checks of the asks between two writes share one read."""
+    sig = store_signature(path)
+    if _STORE_CACHE.get("sig") != (path, sig):
+        _STORE_CACHE["sig"] = (path, sig)
+        _STORE_CACHE["store"] = _read_store(path)
+    return _STORE_CACHE["store"]
+
+
+def _read_store(path: str):
     import pyarrow.parquet as pq
 
     t = pq.read_table(path, columns=["doc_id", "content", "embedding"])
@@ -343,12 +384,14 @@ def run_rag(run: Run) -> None:
     run.info["warmup_s"] = time.perf_counter() - t0
 
     def store_files() -> set[str]:
-        return {os.path.join(r, f) for r, _, fs in os.walk(store) for f in fs}
+        return {f for f, _, _ in store_signature(store)}
 
     files_written = [0]
 
     def one_pass(i: int, tracing: bool) -> float:
-        plan = ["ingest"] + ["ask"] * ASKS_PER_PASS + ["delete"]
+        plan = ["ingest"] + ["ask"] * ASKS_PER_INGEST
+        if i % DELETE_EVERY == DELETE_EVERY - 1:
+            plan.append("delete")
         run.rng.shuffle(plan)
         spent = 0.0
         for kind in plan:
@@ -389,6 +432,7 @@ def run_rag(run: Run) -> None:
             spent += dt
         return spent
 
+    run.cycle = DELETE_EVERY
     run.loop(one_pass)
     run.spark.sparkContext.setJobGroup("perfbench:idle", "idle")
     store_bytes = sum(os.path.getsize(p) for p in store_files())
