@@ -23,6 +23,7 @@ import json
 import os
 import shlex
 import shutil
+import signal
 import sys
 import time
 
@@ -119,11 +120,113 @@ def vm_hwm_mb(pid: int | str) -> float:
     raise RuntimeError(f"no VmHWM for pid {pid}")
 
 
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def become_subreaper() -> None:
+    """Have this process adopt its orphaned descendants (Spark's Python
+    workers once the JVM has gone), so it can wait for them too."""
+    import ctypes
+
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        err = ctypes.get_errno()
+        raise OSError(err, f"prctl(PR_SET_CHILD_SUBREAPER): {os.strerror(err)}")
+
+
+def descendants(pid: int) -> list[int]:
+    """Every live process below `pid` in the process tree."""
+    kids: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        kids.setdefault(ppid, []).append(int(d))
+    out, todo = [], [pid]
+    while todo:
+        for k in kids.get(todo.pop(), ()):
+            out.append(k)
+            todo.append(k)
+    return out
+
+
+def end_children(grace_s: float = 30.0) -> None:
+    """Stop the JVM, then wait until every process this one started, or
+    adopted as a subreaper, has ended; what is still running after
+    `grace_s` is killed."""
+    import subprocess
+
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc.stop()
+        except Exception:  # noqa: BLE001 - the JVM is stopped below either way
+            pass
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    if gateway is not None:
+        # close py4j's connections first, so nothing talks to the
+        # JVM while it goes
+        try:
+            gateway.shutdown()
+        except Exception:  # noqa: BLE001 - the JVM is stopped below either way
+            pass
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+    if proc is not None:
+        if proc.stdin is not None and not proc.stdin.closed:
+            proc.stdin.close()  # the JVM exits when its stdin closes
+        try:
+            proc.wait(timeout=grace_s)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    deadline = time.monotonic() + grace_s
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return  # no child left, live or unreaped
+        if pid:
+            continue
+        if time.monotonic() > deadline:
+            for p in descendants(os.getpid()):
+                try:
+                    os.kill(p, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.05)
+
+
+def _exit_on_signal(signum, _frame):
+    sys.exit(128 + signum)
+
+
 def main(argv=None) -> int:
     args = parse_args(argv)
     check_checkout()
-    sys.path.insert(1, ROOT)
+    become_subreaper()
+    for sig in (signal.SIGTERM, signal.SIGHUP):
+        signal.signal(sig, _exit_on_signal)
     run_dir = os.path.join(WORK, f"run-{os.getpid()}")
+    try:
+        result = bench(args, run_dir)
+    finally:
+        end_children()
+        shutil.rmtree(run_dir, ignore_errors=True)
+    print(json.dumps(result))
+    return 0
+
+
+def bench(args, run_dir: str) -> dict:
+    """Run the workload and return its result object."""
+    sys.path.insert(1, ROOT)
     dirs = isolate(run_dir, bool(args.trace))
 
     import metrics
@@ -182,8 +285,7 @@ def main(argv=None) -> int:
     else:
         vals = metrics.end_to_end(run, session_s)
     result["metrics"] = {k: {"value": v, "unit": metrics.UNITS[k]} for k, v in vals.items()}
-    print(json.dumps(result))
-    return 0
+    return result
 
 
 def record(args, run) -> None:

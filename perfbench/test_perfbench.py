@@ -9,6 +9,7 @@ import hashlib
 import json
 import math
 import os
+import subprocess
 import sys
 
 import numpy as np
@@ -222,3 +223,30 @@ def test_exact_topk_scores():
     want = sorted((c for c in cos if c >= 0), reverse=True)[:5]
     assert got.tolist() == pytest.approx(want)
     assert all(math.isfinite(x) for x in got)
+
+
+_REAP = """
+import os, subprocess, sys, time
+sys.path.insert(0, {here!r})
+import run
+run.become_subreaper()
+# the shell exits at once and leaves its background sleep orphaned
+subprocess.Popen(["sh", "-c", "sleep {sleep} & exit 0"]).wait()
+assert run.descendants(os.getpid()), "the orphaned sleep was not adopted"
+t0 = time.monotonic()
+run.end_children(grace_s={grace})
+assert not run.descendants(os.getpid())
+print(time.monotonic() - t0)
+"""
+
+
+@pytest.mark.parametrize("sleep, grace, lo, hi", [
+    (1.5, 30.0, 1.0, 20.0),   # waits for a descendant that ends by itself
+    (60.0, 0.5, 0.0, 20.0),   # kills one that outlives the grace time
+])
+def test_end_children_leaves_no_descendant(sleep, grace, lo, hi):
+    code = _REAP.format(here=HERE, sleep=sleep, grace=grace)
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, timeout=60)
+    assert out.returncode == 0, out.stderr
+    assert lo <= float(out.stdout) <= hi
